@@ -325,7 +325,7 @@ def main() -> None:
 
     # PBF ingest volume line (VERDICT r13 #5): decode fan-out over a
     # cached 64 MB dense-planet file (tools/make_dense_pbf.py — ~300
-    # blobs, one InputPartition each). The 256 MB probe lives in
+    # blobs, packed into byte-sized decode splits). The 256 MB probe lives in
     # tools/pbf_volume_probe.py + SCALE.md; this smaller per-round
     # line tracks decode throughput drift.
     from tools.pbf_volume_probe import probe as pbf_probe

@@ -38,7 +38,7 @@ def ingest_region(region: str, subregion: str, data_dir: str) -> None:
     """Decode one region's .osm.pbf extract into element parquet
     (replaces the reference's download + osm2pgsql streaming,
     osm_etl.py:54-56 — no container, no native decoder: the pure-
-    Python blob-parallel reader in sources/pbf)."""
+    Python split-parallel reader in sources/pbf)."""
     from osm_airflow_spark.session import get_spark
     from osm_airflow_spark.sources.pbf import ingest_pbf
 
@@ -77,12 +77,13 @@ def transform_region(
     from osm_airflow_spark.io import write_snapshot
     from osm_airflow_spark.plans.osm import build_highway_layer
     from osm_airflow_spark.session import get_spark
+    from osm_airflow_spark.sources.pbf import read_ingested
 
     from pyspark.sql import functions as F
 
     spark = get_spark(f"osm-etl-{subregion}")
-    nodes = spark.read.parquet(f"{data_dir}/{subregion}/nodes")
-    ways = spark.read.parquet(f"{data_dir}/{subregion}/ways")
+    nodes = read_ingested(spark, f"{data_dir}/{subregion}/nodes", "nodes")
+    ways = read_ingested(spark, f"{data_dir}/{subregion}/ways", "ways")
     layer = build_highway_layer(nodes, ways).drop("line")
     # region MUST lead the partition spec: dynamic partition overwrite
     # replaces every (pgosm_date, geohash) partition a write touches,

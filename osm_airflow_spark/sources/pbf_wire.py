@@ -35,6 +35,7 @@ OSM PBF message numbers (osmformat.proto / fileformat.proto, public):
 
 from __future__ import annotations
 
+import os
 import struct
 import zlib
 
@@ -610,48 +611,72 @@ def to_deg(offset: int, granularity: int, raw: int) -> float:
     return NANO * (offset + granularity * raw)
 
 
-def scan_blob_offsets(pbf_path: str) -> list[tuple[int, int, str]]:
-    """Fileblock framing: [4-byte BE len][BlobHeader][Blob]. Returns
-    (blob_start, blob_len, type) per block — the driver-side pass
-    reads only headers (bytes proportional to block COUNT, not file
-    size), then executors fetch their blob ranges independently.
+def iter_fileblocks(fh, start: int = 0, end: int | None = None):
+    """Fileblock framing: [4-byte BE len][BlobHeader][Blob]. Yields
+    (blob_start, blob_len, type) for each fileblock that begins in
+    [start, end) (``end`` defaults to the file size). ``start`` must
+    be a fileblock boundary. Only headers are read, so the walk costs
+    bytes proportional to block COUNT, not file size; the position is
+    tracked here, so a caller may read blobs from ``fh`` between
+    steps.
 
     Bounds (untrusted input): BlobHeader capped at the spec's 64KB,
     datasize at the 32MB blob cap, and a truncated header surfaces as
     ValueError carrying the file offset — never a raw IndexError."""
-    offsets: list[tuple[int, int, str]] = []
+    if end is None:
+        end = os.fstat(fh.fileno()).st_size
+    at = start
+    while at < end:
+        fh.seek(at)
+        raw = fh.read(4)
+        if len(raw) < 4:
+            raise ValueError(f"truncated fileblock length prefix at {at}")
+        header_len = struct.unpack(">I", raw)[0]
+        if header_len > MAX_HEADER_LEN:
+            raise ValueError(
+                f"BlobHeader of {header_len} bytes at {at} exceeds "
+                f"{MAX_HEADER_LEN} spec cap"
+            )
+        header_bytes = fh.read(header_len)
+        if len(header_bytes) < header_len:
+            raise ValueError(f"truncated BlobHeader at {at}")
+        try:
+            header = parse_message(header_bytes)
+        except (IndexError, ValueError) as e:
+            raise ValueError(f"corrupt BlobHeader at {at}: {e!r}") from e
+        blob_type = first(header, 1, b"").decode("utf-8")
+        datasize = first(header, 3, 0)
+        if datasize > MAX_BLOB_RAW:
+            raise ValueError(
+                f"Blob datasize={datasize} at {at} exceeds "
+                f"{MAX_BLOB_RAW} spec cap"
+            )
+        blob_start = at + 4 + header_len
+        yield blob_start, datasize, blob_type
+        at = blob_start + datasize
+
+
+def scan_blob_offsets(pbf_path: str) -> list[tuple[int, int, str]]:
+    """(blob_start, blob_len, type) of every fileblock — the
+    driver-side planning pass; executors then fetch their byte ranges
+    independently (see iter_data_blobs)."""
     with open(pbf_path, "rb") as fh:
-        while True:
-            at = fh.tell()
-            raw = fh.read(4)
-            if len(raw) == 0:
-                break
-            if len(raw) < 4:
-                raise ValueError(f"truncated fileblock length prefix at {at}")
-            header_len = struct.unpack(">I", raw)[0]
-            if header_len > MAX_HEADER_LEN:
-                raise ValueError(
-                    f"BlobHeader of {header_len} bytes at {at} exceeds "
-                    f"{MAX_HEADER_LEN} spec cap"
-                )
-            header_bytes = fh.read(header_len)
-            if len(header_bytes) < header_len:
-                raise ValueError(f"truncated BlobHeader at {at}")
-            try:
-                header = parse_message(header_bytes)
-            except (IndexError, ValueError) as e:
-                raise ValueError(f"corrupt BlobHeader at {at}: {e!r}") from e
-            blob_type = first(header, 1, b"").decode("utf-8")
-            datasize = first(header, 3, 0)
-            if datasize > MAX_BLOB_RAW:
-                raise ValueError(
-                    f"Blob datasize={datasize} at {at} exceeds "
-                    f"{MAX_BLOB_RAW} spec cap"
-                )
-            start = fh.tell()
-            offsets.append((start, datasize, blob_type))
-            fh.seek(start + datasize)
-    return offsets
+        return list(iter_fileblocks(fh))
+
+
+def iter_data_blobs(pbf_path: str, start: int, length: int):
+    """The executor half of a decode split: the bytes of each OSMData
+    blob whose fileblock begins in [start, start + length), one blob
+    at a time, so memory stays bounded by one blob whatever the split
+    size. OSMHeader blocks were validated while planning
+    (validated_data_offsets) and are skipped."""
+    with open(pbf_path, "rb") as fh:
+        for blob_start, size, blob_type in iter_fileblocks(
+            fh, start, start + length
+        ):
+            if blob_type == "OSMData":
+                fh.seek(blob_start)
+                yield fh.read(size)
 
 
 def validated_data_offsets(pbf_path: str) -> list[tuple[int, int]]:

@@ -411,17 +411,27 @@ def test_zorder_write_tightens_both_dimensions(spark, sf_dir, tmp_path):
     assert spark.read.parquet(z_dir).count() == li.count()
 
 
-def test_pbf_python_datasource_matches_function_reader(spark, pbf_file):
+def test_pbf_python_datasource_matches_function_reader(spark, tmp_path):
     """The osm_pbf Data Source (Spark 4 Python DataSource API) must
-    return exactly the rows the function-style reader returns: same
-    union schema, same elements, one partition per OSMData blob."""
+    return exactly the rows the function-style reader returns, and fan
+    out the same way: same union schema, same elements, the same
+    decode splits — one for a small file under the default settings,
+    one per blob when spark.sql.files.maxPartitionBytes is below a
+    blob."""
     from osm_airflow_spark.sources.pbf import read_pbf_elements
     from osm_airflow_spark.sources.pbf_datasource import register_pbf_source
+    from osm_airflow_spark.sources.pbf_wire import validated_data_offsets, write_pbf
 
-    register_pbf_source(spark)
-    via_source = spark.read.format("osm_pbf").load(pbf_file)
-    via_fn = read_pbf_elements(spark, pbf_file)
-    assert via_source.schema == via_fn.schema
+    extra = [
+        {"node_id": 1000 + i, "lat": 40.0 + i * 1e-3, "lon": -3.0,
+         "tags": {"name": f"n{i}"} if i % 3 == 0 else {}}
+        for i in range(20)
+    ]
+    pbf_file = str(tmp_path / "multi.osm.pbf")
+    write_pbf(pbf_file, SAMPLE_NODES + extra, SAMPLE_WAYS, SAMPLE_RELATIONS,
+              nodes_per_block=4)
+    blobs = len(validated_data_offsets(pbf_file))
+    assert blobs == 7
 
     def canon(df):
         return sorted(
@@ -432,12 +442,25 @@ def test_pbf_python_datasource_matches_function_reader(spark, pbf_file):
             for r in df.collect()
         )
 
-    assert canon(via_source) == canon(via_fn)
+    for max_bytes, splits in ((None, 1), ("1", blobs)):
+        if max_bytes:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", max_bytes)
+        try:
+            register_pbf_source(spark)
+            via_source = spark.read.format("osm_pbf").load(pbf_file)
+            via_fn = read_pbf_elements(spark, pbf_file)
+            assert via_source.schema == via_fn.schema
+            assert via_source.rdd.getNumPartitions() == splits
+            assert via_fn.rdd.getNumPartitions() == splits
+            assert canon(via_source) == canon(via_fn)
+        finally:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    register_pbf_source(spark)
     counts = {
         r["kind"]: r["n"]
         for r in via_source.groupBy("kind").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    assert counts == {"node": 4, "way": 2, "relation": 1}
+    assert counts == {"node": 24, "way": 2, "relation": 1}
 
 
 @pytest.mark.parametrize("which", ["roundtrip", "dense10k"])
@@ -1152,22 +1175,28 @@ def test_pbf_missing_osmheader_refused(tmp_path):
         pbf_wire.validated_data_offsets(swapped)
 
 
-def test_dense_volume_file_decodes_exactly(spark, tmp_path):
+@pytest.fixture(scope="module")
+def dense_pbf(tmp_path_factory):
+    """(path, facts) of an 8 MB dense-planet file (tools/make_dense_pbf.py)."""
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.make_dense_pbf import build
+
+    path = str(tmp_path_factory.mktemp("dense") / "dense.osm.pbf")
+    return path, build(path, target_mb=8)
+
+
+def test_dense_volume_file_decodes_exactly(spark, dense_pbf):
     """Volume-proof generator contract (r14, tools/make_dense_pbf.py):
     the dense-planet file's advertised element counts are what the
     full Spark fan-out decodes; node ids are globally unique across
     blobs (the per-blob first-delta re-prefix really does advance the
     base), way refs resolve to in-file node ids, and the ~10% tag
     density survives the columnar per-blob emission path."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from tools.make_dense_pbf import build
-
     from osm_airflow_spark.sources.pbf import read_pbf_elements
 
-    path = str(tmp_path / "dense.osm.pbf")
-    facts = build(path, target_mb=8)
+    path, facts = dense_pbf
     assert facts["blobs"] >= 4
 
     union = read_pbf_elements(spark, path)
@@ -1195,6 +1224,104 @@ def test_dense_volume_file_decodes_exactly(spark, tmp_path):
     ).count()
     assert dangling == 0
 
+
+
+def test_pack_splits_follows_spark_file_split_rule():
+    """Decode splits tile the file in whole fileblocks from offset 0,
+    sized by min(maxPartitionBytes, max(openCost, (file + openCost) /
+    minPartitions)); a blob above the target gets a split of its own."""
+    from osm_airflow_spark.sources.pbf import pack_splits
+
+    mb = 1 << 20
+    # 64 one-MB fileblocks after a 10-byte header block
+    blobs = [(i * mb + 10, mb) for i in range(64)]
+    size = 64 * mb + 10
+
+    def check(splits, target):
+        assert splits[0][0] == 0
+        assert sum(n for _, n in splits) == size  # contiguous, whole file
+        assert all(a + n == b for (a, n), (b, _) in zip(splits, splits[1:]))
+        assert all(n <= target for _, n in splits)
+        return len(splits)
+
+    # the header bytes cost the first split one blob: 16 + 17 + 17 + 14
+    assert check(pack_splits(blobs, size, 128 * mb, 4 * mb, 4), 17 * mb) == 4
+    assert check(pack_splits(blobs, size, 8 * mb, 4 * mb, 4), 8 * mb) == 9
+    assert check(pack_splits(blobs, size, 128 * mb, 4 * mb, 64), 4 * mb) == 17
+    # a KB extract is one split; an oversized blob is alone in its split
+    assert pack_splits([(20, 300), (330, 200)], 530, 128 * mb, 4 * mb, 32) == [(0, 530)]
+    assert pack_splits([(20, 100), (130, 9 * mb), (9 * mb + 140, 10)],
+                       9 * mb + 150, 4 * mb, 4 * mb, 4) == [
+        (0, 120), (120, 9 * mb + 10), (9 * mb + 130, 20)]
+    assert pack_splits([], 10, 128 * mb, 4 * mb, 4) == []
+
+
+def test_pbf_decode_fans_out_by_bytes(spark, pbf_file, dense_pbf):
+    """A small extract is ONE decode task; a file over the split target
+    fans out with no shuffle. No decode task is empty (an empty one
+    still pays a Python worker's fixed cost) and every blob is decoded
+    exactly once."""
+    from osm_airflow_spark.sources.pbf import read_pbf_elements
+
+    def rows_per_task(df):
+        n = df.rdd.getNumPartitions()
+        per_task = dict(df.groupBy(F.spark_partition_id()).count().collect())
+        assert sorted(per_task) == list(range(n))  # no task is empty
+        return n
+
+    assert rows_per_task(read_pbf_elements(spark, pbf_file)) == 1
+
+    path, facts = dense_pbf
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
+    try:
+        union = read_pbf_elements(spark, path)
+        plan = union._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert rows_per_task(union) >= 2
+        counts = dict(union.groupBy("kind").count().collect())
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert counts == {"node": facts["nodes"], "way": facts["ways"]}
+
+
+def test_ingest_read_backs_start_no_spark_job(spark, tmp_path, monkeypatch):
+    """The staged union (ingest_pbf) and the nodes/ways tables
+    (transform_region) are read back with their declared schemas, so
+    no read starts a Spark job; a schema-inferring Parquet read starts
+    one per call."""
+    import importlib.util
+    import pathlib
+
+    from osm_airflow_spark.sources import pbf
+    from osm_airflow_spark.sources.pbf_wire import write_pbf
+
+    path = pathlib.Path(__file__).parent.parent / "dags" / "osm_spark_dag.py"
+    spec = importlib.util.spec_from_file_location("osm_spark_dag_reads", path)
+    dag_mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(dag_mod)
+
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    started = {}
+    read_ingested = pbf.read_ingested
+
+    def spy(spark_, path, table):
+        before = job_ids()
+        df = read_ingested(spark_, path, table)
+        started[table] = job_ids() - before
+        return df
+
+    monkeypatch.setattr(pbf, "read_ingested", spy)
+    write_pbf(str(tmp_path / "r.osm.pbf"), SAMPLE_NODES, SAMPLE_WAYS, SAMPLE_RELATIONS)
+    dag_mod.ingest_region("test", "r", str(tmp_path))
+    dag_mod.transform_region("test", "r", "2024-07-25", str(tmp_path))
+    assert started == {"union": set(), "nodes": set(), "ways": set()}
+    layer = spark.read.parquet(str(tmp_path / "layers" / "highway"))
+    assert [r["way_id"] for r in layer.collect()] == [100]
 
 def test_columnar_decode_identical_to_dict_decode(tmp_path):
     """decode_blob_columnar (the Arrow-bound hot path) must agree

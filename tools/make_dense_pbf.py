@@ -7,9 +7,9 @@ shape matches what the reference's entry point downloads
 (/root/reference/osm_etl.py:54-56) — hundreds of zlib blobs, each one
 PrimitiveBlock of ~50k DenseNodes (with DenseInfo metadata and a
 realistic ~10% tag density) plus a tail of way blocks, so
-``read_pbf_elements`` exercises one InputPartition per blob at real
-blob sizes (~1 MB compressed / ~4 MB inflated, inside the spec's
-16 MB SHOULD bound).
+``read_pbf_elements`` packs real-sized blobs (~1 MB compressed /
+~4 MB inflated, inside the spec's 16 MB SHOULD bound) into its
+byte-sized decode splits.
 
 Built on the INDEPENDENT wire primitives of tools/make_golden_pbf.py
 (zero code shared with the decoder under test), like the adversarial

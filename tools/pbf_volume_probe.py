@@ -7,11 +7,12 @@ The file is cached under /tmp keyed by target size (same bytes every
 run — the generator is deterministic), so repeated probes and the
 bench pay generation once per box.
 
-What the numbers mean at 100 TB: decode parallelism is one
-InputPartition per blob (sources/pbf.py:_offsets_df), so throughput
-scales linearly with executors as long as per-task memory stays
-bounded — which is what worker_peak_rss_mb proves (one inflated
-blob + its row batch, NOT file-proportional).
+What the numbers mean at 100 TB: decode parallelism is one task per
+decode split — consecutive blobs packed by Spark's file-split rule
+(sources/pbf.py:pack_splits) — so throughput scales linearly with
+executors as long as per-task memory stays bounded — which is what
+worker_peak_rss_mb proves (one inflated blob + its row batch, NOT
+split- or file-proportional).
 
 Usage: python tools/pbf_volume_probe.py [target_mb] → one JSON line.
 """
@@ -50,7 +51,7 @@ def dense_file(target_mb: int) -> tuple[str, dict]:
 def probe(spark, target_mb: int) -> dict:
     from pyspark.sql import functions as F
 
-    from osm_airflow_spark.sources.pbf import _offsets_df, read_pbf_elements
+    from osm_airflow_spark.sources.pbf import _splits_df, read_pbf_elements
 
     path, facts = dense_file(target_mb)
     mb = facts["bytes"] / (1024 * 1024)
@@ -77,14 +78,13 @@ def probe(spark, target_mb: int) -> dict:
         peak = 0
         for pdf in iterator:
             for p, start, length in pdf.itertuples(index=False):
-                with open(p, "rb") as fh:
-                    fh.seek(start)
-                    pbf_wire.decode_blob(fh.read(length))
-                peak = max(peak, resource.getrusage(resource.RUSAGE_SELF).ru_maxrss)
+                for blob in pbf_wire.iter_data_blobs(p, start, length):
+                    pbf_wire.decode_blob(blob)
+                    peak = max(peak, resource.getrusage(resource.RUSAGE_SELF).ru_maxrss)
         yield pd.DataFrame({"peak_kb": [peak]})
 
     peak_kb = (
-        _offsets_df(spark, path)
+        _splits_df(spark, path)
         .mapInPandas(_rss, "peak_kb long")
         .agg(F.max("peak_kb"))
         .first()[0]
